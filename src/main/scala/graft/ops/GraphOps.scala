@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 /** Link-graph centrality and label-diffusion operators — the graph
   * pass of a web-scale curation pipeline (reference's corpus hygiene
@@ -13,6 +14,15 @@ import org.apache.spark.sql.functions._
   * each iteration is one equi join on the edge key plus one
   * aggregation, and lineage is truncated per round with an eager
   * `localCheckpoint` so iteration k never replays 1..k−1.
+  *
+  * The BFS/SSSP relaxation ([[bfsDistances]], [[ssspDistances]]) is
+  * size-selected: a graph of at most
+  * `spark.sql.autoBroadcastJoinThreshold` / 24 bytes per (src, dst, w)
+  * edge — Spark's own "fits in one JVM" bound — is collected once and
+  * relaxed over primitive arrays on the driver, because at that size
+  * each round's shuffle and checkpoint jobs cost more than the data;
+  * a larger graph runs the distributed rounds. Both give identical
+  * rows.
   *
   * Everything stays in the exact integer domain — fixed-point ranks
   * with floor division, integer label votes — so results are
@@ -470,22 +480,29 @@ object GraphOps {
     * the frontier is exhausted); unreached nodes flag dist −1 /
     * reached false, never a sentinel leaking into the report.
     *
-    * Scale shape: per round one equi join of the O(|V|) distance
-    * table against the edge table + one map-side-combined min-agg —
-    * the g_pagerank iteration shape; distances localCheckpoint
-    * between rounds so the lineage stays flat.
+    * Scale shape, chosen by edge count (no option): one bounded
+    * `limit(n + 1).collect()` with n = `spark.sql.autoBroadcastJoinThreshold`
+    * / 24 bytes per (src, dst, w) edge (10 MB → 436,906 edges). If the
+    * whole edge table (and seed set) fits, the `rounds` synchronous
+    * relaxations run over primitive arrays on the driver — O(rounds·|E|)
+    * with no per-round Spark job — and the result is a local relation.
+    * Otherwise the distributed rounds run: per round one equi join of
+    * the O(|V|) distance table against the edge table + one
+    * map-side-combined min-agg — the g_pagerank iteration shape;
+    * distances localCheckpoint between rounds so the lineage stays flat.
     *
     * Node universe: the edge endpoints UNIONED with the seed set — an
     * isolated seed (in `seeds` but touching no edge) is trivially at
     * distance 0 and must appear in the report, not silently vanish.
     *
     * `converged` witnesses frontier exhaustion: distances only ever
-    * decrease over a FIXED node set, so an unchanged order-invariant
-    * xxhash64-XOR fingerprint of the (node, dist) rows across the
-    * final round means no distance changed — the output IS the true
-    * BFS distance table, not just round `rounds` of it (the
-    * kCorePeel/trussPeel monotone-witness posture; both sides of the
-    * comparison are checkpoint-materialized, the fingerprints cheap).
+    * decrease over a FIXED node set, so no distance changing across the
+    * final round means the output IS the true BFS distance table, not
+    * just round `rounds` of it (the kCorePeel/trussPeel
+    * monotone-witness posture). The driver finish compares the last
+    * two distance arrays exactly; the distributed rounds compare an
+    * order-invariant xxhash64-XOR fingerprint of the (node, dist) rows,
+    * computed once after the loop on checkpoint-materialized tables.
     *
     * Output: (node, dist, reached, converged).
     */
@@ -605,19 +622,27 @@ object GraphOps {
           / col("s_scaled").cast("double"))
   }
 
-  private def relaxDistances(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: Option[String], seeds: DataFrame, seedCol: String,
-      rounds: Int): DataFrame = {
-    require(rounds >= 1 && rounds <= 8, s"need 1 <= rounds <= 8, got $rounds")
-    // > any reachable distance under the rounds/weight caps (8 rounds
-    // of weight <= 1e6 tops out at 8e6), still far from long overflow
-    // when a round adds a weight to it.
-    val Inf = 999999999L
-    // materialize the edge table ONCE (the pageRank/hits posture): it
-    // is joined every round, and uncheckpointed each round re-ran the
-    // caller's full edge DERIVATION (link-graph windows + unions). The
-    // weight gate raises during this materialization — same loud
-    // contract, surfaced at loop entry instead of round 1.
+  /** > any reachable distance under the rounds/weight caps (8 rounds
+    * of weight <= 1e6 tops out at 8e6), still far from long overflow
+    * when a round adds a weight to it.
+    */
+  private val Inf = 999999999L
+
+  /** Driver-side footprint of one collected (src, dst, w) edge: three
+    * longs. [[relaxDistances]] finishes on the driver when
+    * `spark.sql.autoBroadcastJoinThreshold / EdgeBytes` edges hold the
+    * whole graph — the same "fits in one JVM" bound Spark applies
+    * before it broadcasts a join side.
+    */
+  private val EdgeBytes = 24L
+
+  /** The shared inputs of both relaxation paths: the typed (src, dst, w)
+    * edge table with the weight gate — any weight outside 0..1e6 raises
+    * on whichever path evaluates the edge — and the seed column.
+    */
+  private def relaxInputs(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], seeds: DataFrame,
+      seedCol: String): (DataFrame, DataFrame) = {
     val ed = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
       weightCol.map(w =>
@@ -627,9 +652,116 @@ object GraphOps {
               coalesce(col(w).cast("string"), lit("null")))).cast("long"))
             .otherwise(col(w).cast("long")))
         .getOrElse(lit(1L)).as("w"))
-      .localCheckpoint(true)
-    val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-      .withColumn("__s", lit(1L))
+    (ed, seeds.select(col(seedCol).cast("long").as("node")))
+  }
+
+  /** Bounded synchronous Bellman-Ford behind [[bfsDistances]] and
+    * [[ssspDistances]], size-selected: one bounded
+    * `limit(n + 1).collect()` takes at most n = broadcast threshold /
+    * [[EdgeBytes]] edges (then seeds); when the whole graph fits, the
+    * rounds run over primitive arrays on the driver
+    * ([[relaxOnDriver]]) and no Spark job is launched per round.
+    * Otherwise the distributed rounds ([[relaxDistancesDistributed]])
+    * run. Both return identical rows.
+    */
+  private def relaxDistances(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], seeds: DataFrame, seedCol: String,
+      rounds: Int): DataFrame = {
+    require(rounds >= 1 && rounds <= 8, s"need 1 <= rounds <= 8, got $rounds")
+    val (ed, sd) = relaxInputs(edges, srcCol, dstCol, weightCol, seeds, seedCol)
+    val spark = edges.sparkSession
+    val maxRows = math.min(
+      GraftShim.sqlConf(spark).autoBroadcastJoinThreshold / EdgeBytes,
+      Int.MaxValue - 1L).toInt
+    // all rows of `df` when there are at most maxRows of them
+    def fitting(df: DataFrame): Option[Array[Row]] =
+      if (maxRows <= 0) None
+      else Some(df.limit(maxRows + 1).collect()).filter(_.length <= maxRows)
+    val nodeNullable = ed.schema("src").nullable ||
+      ed.schema("dst").nullable || sd.schema("node").nullable
+    (for (edgeRows <- fitting(ed); seedRows <- fitting(sd))
+      yield relaxOnDriver(spark, edgeRows, seedRows, rounds, nodeNullable))
+      .getOrElse(relaxDistancesDistributed(edges, srcCol, dstCol, weightCol,
+        seeds, seedCol, rounds))
+  }
+
+  /** The driver finish of [[relaxDistances]], row-for-row the
+    * distributed rounds' result. Node universe = non-null edge
+    * endpoints ∪ non-null seeds, plus ONE null node whenever any
+    * endpoint or seed is null; as in the distributed equi joins, a null
+    * never matches — a null seed is unreached and an edge with a null
+    * endpoint relaxes nothing. Each round reads only the previous
+    * round's distances (synchronous), and `converged` compares the last
+    * two rounds' arrays exactly.
+    */
+  private def relaxOnDriver(spark: SparkSession, edgeRows: Array[Row],
+      seedRows: Array[Row], rounds: Int, nodeNullable: Boolean): DataFrame = {
+    var hasNull = false
+    val ids = new Array[Long](2 * edgeRows.length + seedRows.length)
+    var k = 0
+    def add(r: Row, i: Int): Unit =
+      if (r.isNullAt(i)) hasNull = true else { ids(k) = r.getLong(i); k += 1 }
+    edgeRows.foreach { r => add(r, 0); add(r, 1) }
+    seedRows.foreach(add(_, 0))
+    java.util.Arrays.sort(ids, 0, k)
+    var n = 0
+    var i = 0
+    while (i < k) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, v)
+    val live = edgeRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val src = live.map(r => idx(r.getLong(0)))
+    val dst = live.map(r => idx(r.getLong(1)))
+    val w = live.map(_.getLong(2))
+    var cur = Array.fill(n)(Inf)
+    seedRows.foreach(r => if (!r.isNullAt(0)) cur(idx(r.getLong(0))) = 0L)
+    var prev = cur
+    var r = 0
+    while (r < rounds) {
+      prev = cur
+      cur = prev.clone()
+      var e = 0
+      while (e < src.length) {
+        val c = prev(src(e)) + w(e)
+        if (c < cur(dst(e))) cur(dst(e)) = c
+        e += 1
+      }
+      r += 1
+    }
+    val converged = java.util.Arrays.equals(prev, cur)
+    val out = new java.util.ArrayList[Row](n + 1)
+    if (hasNull) out.add(Row(null, -1L, false, converged))
+    i = 0
+    while (i < n) {
+      val reached = cur(i) < Inf
+      out.add(Row(ids(i), if (reached) cur(i) else -1L, reached, converged))
+      i += 1
+    }
+    spark.createDataFrame(out, StructType(Seq(
+      StructField("node", LongType, nodeNullable),
+      StructField("dist", LongType, nullable = false),
+      StructField("reached", BooleanType, nullable = false),
+      StructField("converged", BooleanType, nullable = false))))
+  }
+
+  /** The distributed rounds of [[relaxDistances]], taken when the graph
+    * exceeds the driver bound (callable directly so tests pin both
+    * paths to the same rows).
+    */
+  private[graft] def relaxDistancesDistributed(edges: DataFrame, srcCol: String,
+      dstCol: String, weightCol: Option[String], seeds: DataFrame,
+      seedCol: String, rounds: Int): DataFrame = {
+    require(rounds >= 1 && rounds <= 8, s"need 1 <= rounds <= 8, got $rounds")
+    val (ed0, sd0) = relaxInputs(edges, srcCol, dstCol, weightCol, seeds, seedCol)
+    // materialize the edge table ONCE (the pageRank/hits posture): it
+    // is joined every round, and uncheckpointed each round re-ran the
+    // caller's full edge DERIVATION (link-graph windows + unions). The
+    // weight gate raises during this materialization — same loud
+    // contract, surfaced at loop entry instead of round 1.
+    val ed = ed0.localCheckpoint(true)
+    val sd = sd0.distinct().withColumn("__s", lit(1L))
     val nodes = ed.select(col("src").as("node"))
       .unionByName(ed.select(col("dst").as("node")))
       .unionByName(sd.select(col("node"))).distinct()

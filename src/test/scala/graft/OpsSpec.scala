@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{SegmentOps, TextOps}
@@ -2396,13 +2397,80 @@ class OpsSpec extends SparkSpec {
         "seed", rounds = 1).orderBy($"node").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(g1 == Seq((1L, 0L), (2L, 5L), (3L, 9L)), s"got $g1")
-    // contract: a negative weight corrupts the invariant -> loud error
+    // contract: a negative weight corrupts the invariant -> loud error,
+    // on the driver finish and on the distributed rounds alike
     val bad = Seq((1L, 2L, -1L)).toDF("src", "dst", "w")
     val ex = intercept[Exception] {
       GraphOps.ssspDistances(bad, "src", "dst", "w", seeds, "seed",
         rounds = 1).collect()
     }
     assert(ex.getMessage != null)
+    val exD = intercept[Exception] {
+      GraphOps.relaxDistancesDistributed(bad, "src", "dst", Some("w"), seeds,
+        "seed", rounds = 1).collect()
+    }
+    assert(exD.getMessage != null)
+  }
+
+  test("L190/L196 driver finish returns the distributed rounds' rows exactly") {
+    import graft.ops.GraphOps
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def rows(df: DataFrame): Seq[Row] =
+      df.collect().toSeq.sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+    def same(edges: DataFrame, w: Option[String], seeds: DataFrame,
+        what: String): Unit = (1 to 4).foreach { k =>
+      val local = w match {
+        case Some(c) => GraphOps.ssspDistances(edges, "src", "dst", c, seeds, "seed", k)
+        case None => GraphOps.bfsDistances(edges, "src", "dst", seeds, "seed", k)
+      }
+      val dist = GraphOps.relaxDistancesDistributed(edges, "src", "dst", w,
+        seeds, "seed", k)
+      assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        s"$what rounds=$k: small graph did not take the driver finish")
+      assert(local.schema == dist.schema, s"$what rounds=$k: schema")
+      assert(rows(local) == rows(dist), s"$what rounds=$k")
+    }
+    val s1 = Seq(Tuple1(1L)).toDF("seed")
+    // the L190 fixtures
+    same(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (1L, 4L), (9L, 9L))
+      .toDF("src", "dst"), None, s1, "L190 chain+shortcut")
+    same(Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst"), None,
+      Seq(1L, 99L).toDF("seed"), "L190 isolated seed")
+    // the L196 fixture
+    val l196 = Seq((1L, 3L, 9L), (1L, 2L, 5L), (2L, 3L, 1L)).toDF("src", "dst", "w")
+    same(l196, Some("w"), s1, "L196 sssp")
+    same(l196, None, s1, "L196 bfs")
+    // the bound is threshold / 24 B edges: 72 B holds L196's 3 edges,
+    // 71 B does not and the rounds stay distributed
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try Seq("72" -> true, "71" -> false, "-1" -> false).foreach { case (t, onDriver) =>
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", t)
+      val got = GraphOps.ssspDistances(l196, "src", "dst", "w", s1, "seed", 3)
+      assert(got.queryExecution.analyzed.isInstanceOf[LocalRelation] == onDriver,
+        s"threshold $t")
+      assert(rows(got) == rows(GraphOps.relaxDistancesDistributed(l196, "src",
+        "dst", Some("w"), s1, "seed", 3)), s"threshold $t")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    // duplicate edges (one cheaper), zero weights, a self-loop on a
+    // reached node, null endpoints, an isolated seed and a null seed
+    val odd = Seq[(Option[Long], Option[Long], Long)](
+      (Some(1L), Some(2L), 3L), (Some(1L), Some(2L), 3L), (Some(1L), Some(2L), 1L),
+      (Some(2L), Some(3L), 0L), (Some(3L), Some(3L), 2L), (Some(3L), Some(4L), 5L),
+      (Some(4L), Some(5L), 0L), (Some(5L), None, 1L), (None, Some(6L), 1L),
+      (Some(6L), Some(7L), 2L)).toDF("src", "dst", "w")
+    val oddSeeds = Seq(Some(1L), Some(42L), None).toDF("seed")
+    same(odd, Some("w"), oddSeeds, "odd sssp")
+    same(odd, None, oddSeeds, "odd bfs")
+    // the benchmark's sf0.1 event graph with g_sssp's weights and seeds
+    val dir = "perfbench/data/sf0.1"
+    val ev = QuerySupport.sessionEventEdges(spark, dir)
+      .withColumn("w", lit(1L) + pmod(col("src") + col("dst"), lit(5L)))
+    val entry = QuerySupport.evPoints(spark, dir).groupBy(col("user_id"))
+      .agg(min(col("event_id")).as("seed"))
+    val local = GraphOps.ssspDistances(ev, "src", "dst", "w", entry, "seed", 3)
+    assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(rows(local) == rows(GraphOps.relaxDistancesDistributed(ev, "src",
+      "dst", Some("w"), entry, "seed", 3)), "sf0.1 event graph")
   }
 
   test("L201 hyperBall: registers equal the hand-merged HLL of the ball") {

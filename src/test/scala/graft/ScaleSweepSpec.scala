@@ -322,6 +322,8 @@ class ScaleSweepSpec extends SparkSpec {
     // per round one equi join + min-agg over O(|E|); the rounds cap is
     // fixed, so the sweep axis is the edge count. A regression to a
     // frontier cross join or per-round lineage growth shows here.
+    // ×1 and ×3 fit the driver finish, so the sweep calls the
+    // distributed rounds directly to guard them at every point.
     sweep("bfs", s => {
       val n = 40000L * s
       val chain = spark.range(n).select(col("id").as("src"),
@@ -329,8 +331,8 @@ class ScaleSweepSpec extends SparkSpec {
       val skip = spark.range(n).select(col("id").as("src"),
         ((col("id") + 7L) % n).as("dst"))
       val seeds = spark.range(n / 100L).select((col("id") * 100L).as("seed"))
-      graft.ops.GraphOps.bfsDistances(chain.unionByName(skip),
-        "src", "dst", seeds, "seed", rounds = 3).count()
+      graft.ops.GraphOps.relaxDistancesDistributed(chain.unionByName(skip),
+        "src", "dst", None, seeds, "seed", rounds = 3).count()
     })
   }
 
@@ -353,9 +355,10 @@ class ScaleSweepSpec extends SparkSpec {
 
   test("L196 weighted SSSP relaxation stays near-linear under ×9 edge scale") {
     // identical join+min-agg shape as BFS plus the per-edge weight add
-    // and the fingerprint witness per round — the sweep guards the
-    // witness (a fingerprint regression to a collected sort would
-    // super-linearize) as much as the relaxation
+    // and the fingerprint witness, run once after the loop — the sweep
+    // guards the witness (a fingerprint regression to a collected sort
+    // would super-linearize) as much as the relaxation. Like the bfs
+    // sweep it calls the distributed rounds directly.
     sweep("sssp", s => {
       val n = 40000L * s
       val chain = spark.range(n).select(col("id").as("src"),
@@ -363,8 +366,8 @@ class ScaleSweepSpec extends SparkSpec {
       val skip = spark.range(n).select(col("id").as("src"),
         ((col("id") + 7L) % n).as("dst"), (col("id") % 3L + 1L).as("w"))
       val seeds = spark.range(n / 100L).select((col("id") * 100L).as("seed"))
-      graft.ops.GraphOps.ssspDistances(chain.unionByName(skip),
-        "src", "dst", "w", seeds, "seed", rounds = 3).count()
+      graft.ops.GraphOps.relaxDistancesDistributed(chain.unionByName(skip),
+        "src", "dst", Some("w"), seeds, "seed", rounds = 3).count()
     })
   }
 
